@@ -11,7 +11,9 @@ but expressed as Spark configs. Scale-minded defaults:
   on a real cluster leave AQE's coalescing to right-size the shuffle;
 * session timezone pinned to UTC so timestamp semantics are stable and
   oracle-comparable;
-* Arrow enabled for the pandas-UDF slow path.
+* Arrow enabled for the pandas-UDF slow path;
+* the generated-code cache sized to the catalog's working set, so a
+  long-lived session running many entries compiles each class once.
 """
 
 from __future__ import annotations
@@ -49,6 +51,15 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Spark's default of 100 compiled classes thrashes under a catalog
+        # mix: the 20 perfbench short_queries entries generate 165 distinct
+        # classes, so cycling through them recompiled (and re-JITed) ~155
+        # classes per pass. One sweep of the whole 394-entry catalog at
+        # sf0.001 generates 4410 (median 8 per entry, at most 66); holding
+        # all of them pinned 259 MB of Metaspace and 157 MB of the JVM's
+        # 240 MB code cache. 2000 holds any working set up to 12x the
+        # short mix while bounding what cached classes keep alive.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -42,6 +42,14 @@ _PART_CACHE: dict[str, tuple[str, str]] = {}
 LAST_PROGRESS: dict | None = None
 
 
+# Wall-clock budget for the timeout batch to land in the sink.
+EVICTION_WAIT_S = 60.0
+
+
+def _sink_rows(spark: SparkSession, name: str) -> int:
+    return spark.table(name).count()
+
+
 def _copy_part(src_dir: str, dest: str, mtime: float) -> None:
     part = glob.glob(os.path.join(src_dir, "part-*.parquet"))[0]
     shutil.copy(part, dest)
@@ -97,15 +105,22 @@ def session_timeout_demo(
         )
     try:
         q.processAllAvailable()  # real data; mid-stream sessions emit
-        n_before = spark.table(name).count()
+        n_before = _sink_rows(spark, name)
         _copy_part(sent_dir, os.path.join(src_dir, "sentinel.parquet"), now)
         q.processAllAvailable()  # watermark jumps past every open gap
         # Timeouts fire in the no-data batch AFTER the watermark
         # advances; every user still holds >= 1 open session, so the
-        # count strictly grows once that batch commits.
-        for _ in range(1200):
-            if spark.table(name).count() > n_before:
-                break
+        # count strictly grows once that batch commits. A monotonic
+        # deadline bounds the wait, and running out of it raises rather
+        # than returning a table that may lack the final sessions.
+        deadline = time.monotonic() + EVICTION_WAIT_S
+        while _sink_rows(spark, name) <= n_before:
+            if time.monotonic() >= deadline:
+                raise RuntimeError(
+                    "session_timeout_demo: the timeout batch never "
+                    f"committed within {EVICTION_WAIT_S:g} s; the result "
+                    "would lack every user's final session"
+                )
             time.sleep(0.05)
     finally:
         global LAST_PROGRESS

@@ -511,6 +511,25 @@ def test_pyds_stream_restart_from_checkpoint_no_dup_no_loss(spark):
     assert sorted(ids) == list(range(n))
 
 
+def test_session_timeout_demo_raises_when_timeout_batch_never_lands(
+    spark, sf_dir, monkeypatch
+):
+    """No silently partial result: when the timeout batch never reaches
+    the sink within the wait budget, the close-out harness raises instead
+    of returning a table that lacks every user's final session. The sink
+    count is stubbed flat so the budget runs out; the stream must be
+    stopped either way."""
+    import pytest
+
+    from kafka_s3_etl_spark.streaming import session_close
+
+    monkeypatch.setattr(session_close, "_sink_rows", lambda spark, name: 0)
+    monkeypatch.setattr(session_close, "EVICTION_WAIT_S", 0.2)
+    with pytest.raises(RuntimeError, match="timeout batch never committed"):
+        session_close.session_timeout_demo(spark, sf_dir)
+    assert not [q for q in spark.streams.active if q.name.startswith("sess_")]
+
+
 def test_session_timeout_state_survives_restart(spark, sf_dir, tmp_path):
     """r7 verdict #5: the sessionizer's OPEN-session state must survive
     a clean stop/restart from the checkpoint. Run 1 delivers the real
